@@ -1,6 +1,6 @@
 # Developer entrypoints (reference has make test / make build, Makefile:18-35)
 
-.PHONY: test test-fast parity bench scaling golden-update
+.PHONY: test test-fast parity bench perfbench scaling golden-update
 
 test:
 	python -m pytest tests/ -x -q
@@ -13,6 +13,15 @@ parity:
 
 bench:
 	python bench.py
+
+# both BENCHMARK.json workloads for one seed: make perfbench SEED=11 [SECONDS=10 TRACE=0]
+SEED ?= 1
+SECONDS ?= 10
+TRACE ?= 0
+perfbench:
+	for w in stateful_pairs batch_queries; do \
+		python3 perfbench/run.py --workload $$w --seed $(SEED) --seconds $(SECONDS) --trace $(TRACE) || exit 1; \
+	done
 
 scaling:
 	SPARK_GRAFT_DRIVER_MEM=16g python bench_scaling.py

@@ -129,7 +129,10 @@ def write_training_shards(
     task straddling a split boundary.
 
     ``num_partitions`` defaults to the session shuffle partitioning — set
-    it ~ (corpus bytes / target file size) on a real run."""
+    it ~ (corpus bytes / target file size) on a real run; a value below 1
+    raises ``ValueError`` rather than silently taking that default."""
+    if num_partitions is not None and num_partitions < 1:
+        raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
     joined = manifest.join(documents.select(id_col, text_col), id_col)
     n = num_partitions or int(joined.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     (

@@ -5,13 +5,28 @@ The reference configures its pipeline with prefetch buffers and worker counts
 partitioning, Arrow batching, and the streaming state store. Everything here is
 public Spark configuration.
 
+Partitioning rule: ``spark.sql.shuffle.partitions`` defaults to the session's
+core count, so every shuffle stage -- and every micro-batch of a stateful
+streaming operator -- runs as ONE wave of tasks on the cores the session
+owns. More partitions than cores add no parallelism, only fixed per-task
+cost, and that cost is large for the Python state operators: each state
+partition starts at least two Python worker tasks per micro-batch, at a
+median ~0.35 s per task on a 4-core VM (Spark 4.1, CPython 3.11). Most of
+it is PySpark's worker set-up calling ``importlib.invalidate_caches()``,
+which re-reads the 1328-entry ``pyspark.zip`` directory once for each of
+its 14 cached zip importers. At the earlier ``max(cores, 8)`` a 4-core
+session ran two waves per micro-batch; one wave took the bounded
+``export_pairs`` benchmark pass from ~18 s to ~13 s. A streaming checkpoint
+fixes its state-partition count when it is created, so existing
+checkpoints keep theirs. On a real cluster pass ``shuffle_partitions``
+explicitly (~2-3x total cores; AQE coalesces the excess of stateless
+stages).
+
 Design notes for the 100 TB / 1000-executor target (tested on local[N]):
 
 - AQE on, with skew-join splitting: hot conversations (the "hot ledger"
   analog) are the dominant skew source; AQE splits oversized post-shuffle
   partitions at runtime.
-- ``spark.sql.shuffle.partitions`` defaults to the local core count here; on a
-  real cluster set it ~2-3x total cores (AQE coalesces the excess).
 - Arrow enabled for all pandas UDF exchange; batch size bounded so grouped-map
   state per task stays in memory.
 - RocksDB state store provider for streaming state (bundled with Spark 4):
@@ -25,7 +40,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# SPARK_GRAFT_CPUS, else the CPUs this process may run on (not the host's
+# count: a pinned or containerised process owns fewer)
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or (
+    len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
+)
 
 
 def get_spark(
@@ -38,11 +57,14 @@ def get_spark(
     """Build (or reuse) a SparkSession tuned for this engine.
 
     ``cores`` controls local parallelism (the sandbox proxy for executor
-    count); the same code ships unchanged to a real cluster via
-    ``spark-submit --py-files`` where ``master`` comes from the submitter.
+    count) and defaults to ``SPARK_GRAFT_CPUS``, else the CPUs this process
+    may run on; ``shuffle_partitions`` defaults to ``cores`` (one wave per
+    stage, see the module docstring). The same code ships unchanged to a
+    real cluster via ``spark-submit --py-files`` where ``master`` comes from
+    the submitter.
     """
     cores = cores or DEFAULT_CPUS
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
+    shuffle_partitions = shuffle_partitions or cores
 
     # SPARK_GRAFT_MASTER overrides the master URL — used by bench_scaling.py
     # to run local-cluster[n, c, mem] (one JVM per executor, the honest proxy
@@ -90,9 +112,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def stop_all() -> None:
-    """Stop the active session (test teardown helper)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -85,6 +85,10 @@ def measure_window_close_latency(
     # fixed-cost-vs-parallelism trade the driver-check harnesses pin
     # (registry._harness_partitions); on a real deployment size this to the
     # stateful load, not the core count.
+    # Restoring the setting right after start() (the finally below) is safe:
+    # start() runs the query on a clone of the session taken at that call,
+    # so the query keeps agg_partitions (and a fresh checkpoint records it)
+    # while the caller's session gets its own value back at once.
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(agg_partitions))
     try:

@@ -86,7 +86,10 @@ def run_export(
             q.awaitTermination(timeout_sec)
             if q.isActive:
                 q.stop()
-        return listener.summary() if listener else {}
+        if not listener:
+            return {}
+        listener.wait_terminated(q.id)
+        return listener.summary()
     finally:
         if listener:
             spark.streams.removeListener(listener)

@@ -1,15 +1,30 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import SparkSession
 
 from stellar_etl_spark.session import get_spark
+
+SUITE_PARTITIONS = 8
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cores=8, shuffle_partitions=8, streaming=True)
+    s = get_spark("pytest", cores=8, shuffle_partitions=SUITE_PARTITIONS, streaming=True)
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _restore_shuffle_partitions():
+    """``get_spark`` on a live session re-applies its settings to it: a test
+    that calls ``jobs.main`` leaves the shared session at the partition count
+    ``jobs.main`` computed from its own core default. Restore the suite's
+    value after every test so no test runs on another test's leftovers."""
+    yield
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.conf.set("spark.sql.shuffle.partitions", str(SUITE_PARTITIONS))
 
 
 @pytest.fixture()

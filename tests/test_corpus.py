@@ -2,6 +2,7 @@
 canonicalization -> split -> per-split packing, as one composition."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from stellar_etl_spark.functions.dedup import minhash_candidate_pairs
 from stellar_etl_spark.functions.text import fingerprint64
@@ -135,3 +136,16 @@ def test_write_training_shards_range_partitioned(spark, tmp_path):
     assert len(files) > 1, files
     back = spark.read.parquet(out)
     assert back.count() == 500
+
+
+def test_write_training_shards_rejects_invalid_shard_count(spark, tmp_path):
+    """A shard count below 1 is a caller error, not a request for the
+    session default (which follows the core count)."""
+    d = spark.range(3).select(
+        F.col("id").alias("doc_id"), F.lit("doc").alias("text")
+    )
+    m = d.select("doc_id", F.lit("train").alias("split"), F.col("doc_id").alias("token_offset"))
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match="num_partitions"):
+            write_training_shards(m, d, str(tmp_path / "shards"), num_partitions=bad)
+    assert not (tmp_path / "shards").exists()

@@ -55,9 +55,9 @@ def test_stream_equals_batch_and_lineage(spark, source, tmp_path):
     lineage = sink.lineage()
     assert len(lineage) >= 2  # multiple epochs committed
     assert sum(e["rows"] for e in lineage) == expected.count()
-    # listener progress events are delivered async — it may miss trailing
-    # batches; lineage (above) is the exact count, the listener is telemetry
-    assert m["batches"] >= 1 and 0 < m["input_rows"] <= df.count()
+    # progress events reach the listener asynchronously; run_export waits for
+    # the query's termination event, so the metrics cover every batch
+    assert m["batches"] == len(lineage) and m["input_rows"] == expected.count()
 
 
 def test_exactly_once_replay(spark, source, tmp_path):
@@ -296,6 +296,33 @@ def test_validated_export_routes_rejected(spark, tmp_path):
     assert set(r["_reject_reason"] for r in rejected.collect()) == {"null conv_id", "unknown role"}
 
 
+def test_stateful_pairs_resume_keeps_checkpoint_partitions(spark, source, tmp_path):
+    """A checkpoint fixes its state-partition count when it is created: an
+    export started at 8 shuffle partitions and resumed on a session set to 4
+    (the upgrade path for checkpoints written before the default followed
+    the core count) keeps 8 state partitions and still equals batch."""
+    path, df = source
+    src = str(tmp_path / "src")
+    shutil.copytree(path, src)
+    sink = IdempotentSink(str(tmp_path / "pairs"), ("conv_id", "user_turn_idx"))
+    ckpt = str(tmp_path / "ckpt")
+    ex = lambda s: streaming_pairs(s, "2 minutes", 300)  # noqa: E731
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    first = run_export(spark, src, ex, sink, ckpt, max_files_per_trigger=4,
+                       with_listener=True)
+    assert first["state_partitions"] == 8
+    _flush_sentinel(spark, src)
+    spark.conf.set("spark.sql.shuffle.partitions", "4")  # conftest restores 8
+    resumed = run_export(spark, src, ex, sink, ckpt, max_files_per_trigger=4,
+                         with_listener=True)
+    assert resumed["batches"] >= 1 and resumed["state_partitions"] == 8
+    assert first["late_rows"] == resumed["late_rows"] == 0
+    got = sink.read_sink(spark).where(F.col("conv_id") != "flush")
+    want = extract_pairs(df, max_lag_sec=300)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_stateful_pairs_hot_conversation(spark, tmp_path):
     """Skew stress: one 1024-turn hot conversation through the stateful
     pairing operator — state stays bounded, output matches batch exactly."""
@@ -399,15 +426,17 @@ def test_late_row_watermark_semantics(spark, tmp_path):
         ("flush", 0, "system", "", None, "2026-06-01 00:00:00"),
     ], 0)
     sink = IdempotentSink(str(tmp_path / "wins"), ("conv_id", "window_start"))
-    run_export(
+    m = run_export(
         spark, src,
         lambda s: extract_conversations_windowed(s, "5 minutes", "1 minute"),
-        sink, str(tmp_path / "ck"), max_files_per_trigger=1,
+        sink, str(tmp_path / "ck"), max_files_per_trigger=1, with_listener=True,
     )
     frags = sink.read_raw(spark).where(F.col("conv_id") == "conv_x").collect()
     # exactly ONE emitted row for conv_x's window: the 2 on-time turns plus
     # the grace-batch turn; the 2-batches-late turn left no trace
     assert len(frags) == 1 and frags[0]["n_turns"] == 3
+    # ... except in the metrics: the drop is counted, not silent
+    assert m["late_rows"] == 1
     merged = {r["conv_id"]: r for r in sink.read_sink(spark).collect()}
     assert merged["conv_x"]["n_turns"] == 3
     assert "conv_y" in merged and "advancer" in merged
