@@ -1,6 +1,6 @@
 # Developer entrypoints (reference has make test / make build, Makefile:18-35)
 
-.PHONY: test test-fast parity bench perfbench scaling golden-update
+.PHONY: test test-fast parity bench perfbench perfbench-ab scaling golden-update
 
 test:
 	python -m pytest tests/ -x -q
@@ -22,6 +22,14 @@ perfbench:
 	for w in stateful_pairs batch_queries; do \
 		python3 perfbench/run.py --workload $$w --seed $(SEED) --seconds $(SECONDS) --trace $(TRACE) || exit 1; \
 	done
+
+# interleaved A/B of BASE against the working tree, one perfbench/run.py per
+# side per seed: make perfbench-ab BASE=HEAD WORKLOAD=stateful_pairs SEEDS="1 2 3"
+BASE ?= HEAD
+WORKLOAD ?= stateful_pairs
+SEEDS ?= 1 2 3
+perfbench-ab:
+	python3 perfbench_ab.py --base $(BASE) --workload $(WORKLOAD) --seeds "$(SEEDS)" --seconds $(SECONDS)
 
 scaling:
 	SPARK_GRAFT_DRIVER_MEM=16g python bench_scaling.py

@@ -9,14 +9,9 @@ from pyspark.sql import Column
 import pyspark.sql.functions as F
 
 # C1: stroop → real units, x / 10^7 (internal/utils/main.go:85-88
-# ConvertStroopValueToReal). Double variant matches the reference's float64.
+# ConvertStroopValueToReal). A double, matching the reference's float64.
 def scaled_amount(col: Column, decimals: int = 7) -> Column:
     return col.cast("double") / F.lit(10**decimals)
-
-
-def scaled_amount_decimal(col: Column, decimals: int = 7) -> Column:
-    """Exact variant using Decimal (the reference computes via big.Rat)."""
-    return (col.cast("decimal(38,7)") / F.lit(10**decimals)).cast("decimal(38,7)")
 
 
 # The engine-wide failed-turn predicate (tx `successful` flag analog,

@@ -698,15 +698,17 @@ def _run_streaming_query(
     merged sink contents — the oracle harness for the stateful operators.
 
     Layout: ``src_partitions`` hash(conv_id) data files + a far-future
-    flush-sentinel file (written strictly later; the file source orders new
-    files by modification time, so with ``maxFilesPerTrigger = n_data_files``
-    the sentinel is processed last) — data batch, sentinel batch (advances
-    the watermark past every pending window/state), then Spark's no-data
-    batch fires the event-time timeouts and the state drains. r6: the data
-    write is a hash repartition, NOT ``coalesce(1)`` — coalesce collapses
-    the whole transcripts derivation (scan + window) into ONE task (measured
-    7-12 s of serial write at 10^6 turns vs ~3 s parallel), and the multi-
-    file batch also parallelizes the first micro-batch's scan.
+    flush-sentinel file (its mtime set strictly later than every data
+    file's; the file source orders new files by modification time, so with
+    ``maxFilesPerTrigger = n_data_files`` the sentinel is processed last) —
+    data batch, sentinel batch (advances the watermark past every pending
+    window/state), then Spark's no-data batch fires the event-time timeouts
+    and the state drains. A row dropped as late raises instead of silently
+    shrinking the result. r6: the data write is a hash repartition, NOT
+    ``coalesce(1)`` — coalesce collapses the whole transcripts derivation
+    (scan + window) into ONE task (measured 7-12 s of serial write at 10^6
+    turns vs ~3 s parallel), and the multi-file batch also parallelizes the
+    first micro-batch's scan.
 
     ``per_conv_flush`` writes one far-future ``role='system'`` row PER
     conversation instead of the single 'flush' row. Only valid for
@@ -742,7 +744,10 @@ def _run_streaming_query(
         # 46->55 s (pairs), 20->26 s (conv_state), 19->23 s (join) at sf1.0 —
         # per-partition state-store/commit fixed cost beats the extra
         # parallelism at every scale this harness runs at.
-        n_files = len([f for f in _os.listdir(src) if f.startswith("part-")])
+        data_files = [f"{src}/{f}" for f in _os.listdir(src) if f.startswith("part-")]
+        n_files = len(data_files)
+        if n_files == 0:
+            raise ValueError("streaming harness input wrote no data files")
         if per_conv_flush:
             sentinel = (
                 tv.select("conv_id")
@@ -763,11 +768,21 @@ def _run_streaming_query(
                 "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
             ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
         sentinel.write.mode("append").parquet(src)
+        # an mtime tie with a data file could put the sentinel in batch 0
+        later = max(_os.stat(f).st_mtime_ns for f in data_files) + 1_000_000_000
+        for f in _os.listdir(src):
+            if f.startswith("part-") and f"{src}/{f}" not in data_files:
+                _os.utime(f"{src}/{f}", ns=(later, later))
 
         sink = IdempotentSink(f"{work}/out", keys, output_partitions=4)
         with _harness_partitions(spark):
-            run_export(spark, src, extractor, sink, f"{work}/ckpt",
-                       max_files_per_trigger=n_files, output_mode=output_mode)
+            metrics = run_export(spark, src, extractor, sink, f"{work}/ckpt",
+                                 max_files_per_trigger=n_files, output_mode=output_mode,
+                                 with_listener=True)
+        if metrics["late_rows"] > 0:
+            raise RuntimeError(
+                f"streaming harness dropped {metrics['late_rows']} rows as late"
+            )
         out = sink.read_sink(spark).where(F.col(drop_flush_on) != "flush")
         res = out.localCheckpoint(eager=True)
         # the cap documents this harness's driver-check scale; with the

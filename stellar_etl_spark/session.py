@@ -10,17 +10,25 @@ core count, so every shuffle stage -- and every micro-batch of a stateful
 streaming operator -- runs as ONE wave of tasks on the cores the session
 owns. More partitions than cores add no parallelism, only fixed per-task
 cost, and that cost is large for the Python state operators: each state
-partition starts at least two Python worker tasks per micro-batch, at a
-median ~0.35 s per task on a 4-core VM (Spark 4.1, CPython 3.11). Most of
-it is PySpark's worker set-up calling ``importlib.invalidate_caches()``,
-which re-reads the 1328-entry ``pyspark.zip`` directory once for each of
-its 14 cached zip importers. At the earlier ``max(cores, 8)`` a 4-core
-session ran two waves per micro-batch; one wave took the bounded
-``export_pairs`` benchmark pass from ~18 s to ~13 s. A streaming checkpoint
-fixes its state-partition count when it is created, so existing
-checkpoints keep theirs. On a real cluster pass ``shuffle_partitions``
-explicitly (~2-3x total cores; AQE coalesces the excess of stateless
-stages).
+partition starts at least two Python worker tasks per micro-batch. At the
+earlier ``max(cores, 8)`` a 4-core session ran two waves per micro-batch;
+one wave took the bounded ``export_pairs`` benchmark pass from ~18 s to
+~13 s. A streaming checkpoint fixes its state-partition count when it is
+created, so existing checkpoints keep theirs. On a real cluster pass
+``shuffle_partitions`` explicitly (~2-3x total cores; AQE coalesces the
+excess of stateless stages).
+
+Per-task Python cost: every task's set-up calls
+``importlib.invalidate_caches()``, which before CPython 3.13 re-reads the
+1328-entry ``pyspark.zip`` directory once for each of its 14 cached zip
+importers: 0.17-0.23 s per call in a 16-task pandas UDF job on a 4-core
+VM (Spark 4.1, CPython 3.11). On ``local[...]``/``local-cluster[...]``
+masters, with this package imported from a directory, the workers run
+under :mod:`stellar_etl_spark.pydaemon`, which re-reads an archive only
+when its ``(st_mtime_ns, st_size, st_ino)`` changed: 0.12-0.22 ms per call,
+and the ``export_pairs`` benchmark pass fell from ~12.1 s to ~7.8 s. A
+package shipped as a ``--py-files`` zip, or any other master, keeps the
+stock ``pyspark.daemon``.
 
 Design notes for the 100 TB / 1000-executor target (tested on local[N]):
 
@@ -37,6 +45,7 @@ Design notes for the 100 TB / 1000-executor target (tested on local[N]):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -45,6 +54,23 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or (
     len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
 )
+
+# the directory this package was imported from; not a directory when it came
+# from a zip (``spark-submit --py-files``)
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_conf(master: str) -> dict[str, str]:
+    """Run Python workers under :mod:`stellar_etl_spark.pydaemon` on local
+    masters when the package was imported from a plain directory, and put
+    that directory on the workers' PYTHONPATH so the daemon import does not
+    depend on the JVM's cwd. Anything else keeps the stock ``pyspark.daemon``."""
+    if not (os.path.isdir(_PKG_ROOT) and re.match(r"local(-cluster)?\[", master)):
+        return {}
+    return {
+        "spark.python.daemon.module": "stellar_etl_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH": _PKG_ROOT,
+    }
 
 
 def get_spark(
@@ -61,7 +87,8 @@ def get_spark(
     may run on; ``shuffle_partitions`` defaults to ``cores`` (one wave per
     stage, see the module docstring). The same code ships unchanged to a
     real cluster via ``spark-submit --py-files`` where ``master`` comes from
-    the submitter.
+    the submitter. ``extra_conf`` is applied last, so it overrides every
+    setting here, the worker daemon's included.
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cores
@@ -105,7 +132,7 @@ def get_spark(
             .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
         )
 
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()

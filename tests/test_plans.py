@@ -309,3 +309,18 @@ def test_corpus_pipeline_no_degenerate_joins(spark):
     plan = _plan(build_training_corpus(d, min_quality=0.0, min_jaccard=0.9))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_harness_partitions_restores_conf(spark):
+    from stellar_etl_spark.plans.registry import _harness_partitions
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.stateStore.providerClass")
+    before = [spark.conf.get(k) for k in keys]
+    with _harness_partitions(spark, 3):
+        assert spark.conf.get(keys[0]) == "3"
+        assert spark.conf.get(keys[1]).endswith("HDFSBackedStateStoreProvider")
+    assert [spark.conf.get(k) for k in keys] == before
+    with pytest.raises(ZeroDivisionError):
+        with _harness_partitions(spark, 3):
+            1 / 0
+    assert [spark.conf.get(k) for k in keys] == before

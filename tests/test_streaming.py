@@ -721,3 +721,54 @@ def test_dedup_orderability_handles_nested_maps(spark, tmp_path):
     sink = IdempotentSink(str(tmp_path / "maps"), ("conv_id", "turn_idx"))
     sink.foreach_batch(df, 0)
     assert sink.read_sink(spark).count() == 2
+
+
+def test_harness_raises_on_late_rows(spark, micro, monkeypatch):
+    """The driver-check harness must not return a silently shrunken result:
+    a run whose listener reports a row dropped as late raises."""
+    from stellar_etl_spark.plans.registry import _run_streaming_query
+    from stellar_etl_spark.streaming.listener import MetricsListener
+
+    summary = MetricsListener.summary
+    monkeypatch.setattr(MetricsListener, "summary", lambda self: {**summary(self), "late_rows": 1})
+    with pytest.raises(RuntimeError, match="dropped 1 rows as late"):
+        _run_streaming_query(
+            spark, micro, lambda s: running_conversation_state(s, "2 minutes"),
+            ("conv_id",), output_mode="update",
+        )
+
+
+def test_harness_sentinel_sorts_after_data_files(spark, micro, monkeypatch):
+    """The file source orders files by mtime: data files stamped a minute
+    ahead (clock skew, or a tie) must still be read before the sentinel."""
+    import time
+
+    import stellar_etl_spark.generator as generator
+    import stellar_etl_spark.streaming.pipeline as pipeline
+    from stellar_etl_spark.plans.registry import _run_streaming_query
+
+    data = set()
+
+    def write_ahead(df, path, **kw):
+        write_transcripts(df, path, **kw)
+        ahead = time.time() + 60
+        for f in os.listdir(path):
+            os.utime(os.path.join(path, f), (ahead, ahead))
+            data.add(f)
+
+    seen = {}
+
+    def spy(spark, src, *a, **kw):
+        seen.update({f: os.stat(os.path.join(src, f)).st_mtime_ns
+                     for f in os.listdir(src) if f.startswith("part-")})
+        return run_export(spark, src, *a, **kw)
+
+    monkeypatch.setattr(generator, "write_transcripts", write_ahead)
+    monkeypatch.setattr(pipeline, "run_export", spy)
+    out = _run_streaming_query(
+        spark, micro, lambda s: running_conversation_state(s, "2 minutes"),
+        ("conv_id",), output_mode="update",
+    )
+    assert {r.conv_id: r.n_turns for r in out.collect()} == {"conv_a": 5, "conv_b": 1, "conv_c": 3}
+    sentinel_ns = [ns for f, ns in seen.items() if f not in data]
+    assert sentinel_ns and min(sentinel_ns) > max(seen[f] for f in seen if f in data)
